@@ -10,9 +10,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    from tsprofiler_spark.session import get_spark
+    from tsprofiler_spark.session import DEFAULT_CPUS, get_spark
 
-    spark = get_spark(app_name="tsprofiler-tests", cores=8, shuffle_partitions=8)
+    spark = get_spark(
+        app_name="tsprofiler-tests", cores=DEFAULT_CPUS, shuffle_partitions=8
+    )
     yield spark
 
 

@@ -92,11 +92,11 @@ def test_crash_before_commit_then_replay(spark, transcripts, tmp_path):
     from pyspark.sql import functions as F
 
     from tsprofiler_spark.plans.retention import (
-        _tier_partials,
         merge_transcript_batch,
         touched_days,
     )
     from tsprofiler_spark.operators.ingest import derive_series
+    from tsprofiler_spark.operators.rollup import partials, tier_bucket
 
     store = RollupStore(spark, str(tmp_path / "s"))
     wm, affected = transcripts.agg(F.max("ts"), touched_days()).collect()[0]
@@ -106,7 +106,7 @@ def test_crash_before_commit_then_replay(spark, transcripts, tmp_path):
     # batch will use, then stop — nothing committed
     run_id = "stream-7"
     _lin, ptrs = store.merge_tiers(
-        {"1m": _tier_partials(derive_series(transcripts), "1m")},
+        {"1m": partials(derive_series(transcripts), tier_bucket("1m"))},
         run_id, affected=affected,
     )
     assert store.read_tier("1m") is None  # staged versions are invisible
@@ -172,10 +172,10 @@ def test_read_tier_day_range_prunes_paths(spark, transcripts, tmp_path):
 def test_late_row_after_1m_expiry_preserves_coarse_tiers(spark, transcripts, tmp_path):
     """A late row for a day already TTL-expired out of the 1m tier (tier
     TTLs differ: 1m expires first, 1h/1d retain the day) must fold
-    ADDITIVELY into the surviving 1h/1d day rollups. Before the
-    merge_days fix, the replace=True cascade rebuilt those days from the
-    staged 1m content — which for an expired day is the late rows ALONE —
-    silently destroying months of committed coarse-tier history."""
+    ADDITIVELY into the surviving 1h/1d day rollups: the merge rule folds
+    the increment into the committed coarse day, never rebuilds it from
+    the late rows ALONE (which would silently destroy months of committed
+    coarse-tier history)."""
     from tsprofiler_spark.plans.retention import merge_transcript_batch
 
     store = RollupStore(spark, str(tmp_path / "s"))
@@ -216,23 +216,18 @@ def test_late_row_after_1m_expiry_preserves_coarse_tiers(spark, transcripts, tmp
     # other retained days untouched
     other = [d for d in store.manifest.tiers["1h"] if d != day][0]
     assert day_totals("1h", other)[0] > 0
-    # the resurrected day is durably flagged partial on the 1m tier
-    assert day in store.manifest.partial_days("1m")
 
 
 def test_second_late_batch_after_expiry_preserves_coarse_tiers(
     spark, transcripts, tmp_path
 ):
-    """Durability of the resurrected-day state: after the FIRST late batch
-    recreates a committed 1m version for a TTL-expired day, a SECOND late
-    batch for the same day no longer looks resurrected by pointer presence
-    alone — without the manifest's per-day `partial` flag it took the
-    replace path and rebuilt the 1h/1d day from staged 1m content that
-    lacks the expired history (permanent coarse-tier loss on the streaming
-    path, which never re-expires between batches). Both late batches must
-    fold additively, and only THIS batch's increment may cascade for a
-    partial day (cascading the staged 1m content would double-count the
-    first batch's rows)."""
+    """After the FIRST late batch recreates a committed 1m version for a
+    TTL-expired day, a SECOND late batch for the same day must still fold
+    additively into 1h/1d: the coarse day is its committed version plus
+    only THIS batch's increment — never a rebuild from the 1m day (which
+    lacks the expired history) and never the first batch's rows again
+    (double count). The store is reopened between the batches (streaming
+    restart scenario)."""
     from tsprofiler_spark.plans.retention import merge_transcript_batch
 
     store = RollupStore(spark, str(tmp_path / "s"))
@@ -265,10 +260,8 @@ def test_second_late_batch_after_expiry_preserves_coarse_tiers(
     wm = store.manifest.watermark
 
     merge_transcript_batch(late1, store, "late-1", wm)
-    # reload the manifest from disk between batches: the flag must be
-    # durable, not an in-memory artifact (streaming restart scenario)
+    # reload the manifest from disk between batches (streaming restart)
     store2 = RollupStore(spark, str(tmp_path / "s"))
-    assert day in store2.manifest.partial_days("1m")
     merge_transcript_batch(late2, store2, "late-2", wm)
 
     store = store2
@@ -276,23 +269,20 @@ def test_second_late_batch_after_expiry_preserves_coarse_tiers(
     after_1d = day_totals("1d", day)
     assert after_1h[0] == before_1h[0] + n1 + n2, (before_1h, after_1h, n1, n2)
     assert after_1d[0] == before_1d[0] + n1 + n2
-    # the day stays flagged for every future late batch
-    assert day in store.manifest.partial_days("1m")
-    # ... until it TTL-expires out of 1m again, which clears the flag
+    # the resurrected 1m day TTL-expires out of 1m again
     store.expire("1m", 1)
     assert day not in store.manifest.tiers.get("1m", {})
-    assert day not in store.manifest.partial_days("1m")
 
 
 def test_partial_day_with_coarse_pointers_gone_takes_replace_path(
     spark, transcripts, tmp_path
 ):
-    """A partial-flagged 1m day whose 1h/1d pointers were later dropped
-    (e.g. a selective coarse-tier expire) has nothing left to preserve:
-    the merge must REBUILD the coarse day from the COMPLETE staged 1m
-    content (all surviving late batches), not fold only the newest
-    batch's increment into nothing — that would silently drop the earlier
-    late rows still committed in 1m."""
+    """A resurrected 1m day whose 1h/1d pointers were later dropped (e.g. a
+    selective coarse-tier expire): the coarse tiers' merge base falls back
+    to the committed 1m day combined to 1h/1d, so the coarse day holds ALL
+    surviving late batches — folding only the newest batch's increment
+    into nothing would silently drop the earlier late rows still
+    committed in 1m."""
     from tsprofiler_spark.plans.retention import merge_transcript_batch
 
     store = RollupStore(spark, str(tmp_path / "s"))
@@ -310,13 +300,12 @@ def test_partial_day_with_coarse_pointers_gone_takes_replace_path(
     n1, n2 = late1.count(), late2.count()
     wm = store.manifest.watermark
     merge_transcript_batch(late1, store, "late-1", wm)
-    assert day in store.manifest.partial_days("1m")
 
     # selective coarse expiry: the day's 1h/1d pointers vanish while the
-    # (partial) 1m day and its flag survive
+    # resurrected 1m day survives
     store.manifest.drop_days("1h", [day])
     store.manifest.drop_days("1d", [day])
-    assert day in store.manifest.partial_days("1m")  # 1m flag untouched
+    assert day in store.manifest.tiers["1m"]
 
     merge_transcript_batch(late2, store, "late-2", wm)
     one_m = store.read_tier("1m").where(F.col("day") == day)
@@ -334,9 +323,8 @@ def test_ttl_late_replay_restart_lifecycle(spark, transcripts, tmp_path):
     """One combined lifecycle (r4 verdict ask #5): stream ingest -> 1m TTL
     expiry -> late replay resurrecting an expired day -> stream RESTART
     from the same checkpoint -> a second late drop for the same day. The
-    coarse tiers must stay additive through the whole sequence, the
-    partial flag must survive the restart, and the checkpoint must replay
-    nothing twice."""
+    coarse tiers must stay additive through the whole sequence, across
+    every restart, and the checkpoint must replay nothing twice."""
     from tsprofiler_spark.streaming import start_rollup_stream, stream_transcripts
 
     inbox = str(tmp_path / "inbox")
@@ -381,10 +369,9 @@ def test_ttl_late_replay_restart_lifecycle(spark, transcripts, tmp_path):
     )
     q.awaitTermination(120)
     assert day_totals(store, "1h", day) == before_1h + n1
-    assert day in store.manifest.partial_days("1m")
 
     # phase 3: second late drop for the SAME day, another restart — the
-    # durable partial flag must keep the merge additive
+    # merge must stay additive
     late2 = day_rows.where(F.col("turn_idx") % 2 == 1).limit(5)
     n2 = late2.count()
     assert n2 > 0
@@ -408,3 +395,74 @@ def test_ttl_late_replay_restart_lifecycle(spark, transcripts, tmp_path):
     q.awaitTermination(120)
     assert day_totals(store, "1h", day) == before_1h + n1 + n2
     assert len(store.manifest.runs) == runs_before
+
+
+def test_legacy_partial_flag_manifest_loads_and_folds_additively(
+    spark, transcripts, tmp_path
+):
+    """A manifest written while TTL-resurrected days carried a durable
+    ``partial`` flag still loads; the next late batch for the flagged day
+    folds additively into 1h/1d under the one merge rule, and the next save
+    drops the key."""
+    import json
+
+    from tsprofiler_spark.plans.retention import merge_transcript_batch
+
+    base = str(tmp_path / "s")
+    store = RollupStore(spark, base)
+    incremental_run(
+        transcripts,
+        store,
+        SETTINGS,
+        tiers_cfg={"1m": {"ttl_days": 1}, "1h": {"ttl_days": 365}, "1d": {"ttl_days": 365}},
+        expire=True,
+    )
+    day = sorted(set(store.manifest.tiers["1h"]) - set(store.manifest.tiers["1m"]))[0]
+
+    def day_n(s, tier):
+        return s.read_tier(tier).where(F.col("day") == day).agg(F.sum("n")).collect()[0][0]
+
+    before_1h, before_1d = day_n(store, "1h"), day_n(store, "1d")
+    day_rows = transcripts.where(F.to_date("ts") == day)
+    late1 = day_rows.where(F.col("turn_idx") % 2 == 0).limit(7)
+    late2 = day_rows.where(F.col("turn_idx") % 2 == 1).limit(5)
+    n1, n2 = late1.count(), late2.count()
+    wm = store.manifest.watermark
+    merge_transcript_batch(late1, store, "late-1", wm)
+
+    # the resurrected day as an older engine recorded it
+    path = store.manifest.path
+    with open(path) as f:
+        doc = json.load(f)
+    doc["partial"] = {"1m": [day]}
+    with open(path, "w") as f:
+        json.dump(doc, f)
+
+    legacy = RollupStore(spark, base)
+    assert legacy.manifest.watermark == wm
+    merge_transcript_batch(late2, legacy, "late-2", wm)
+    assert day_n(legacy, "1m") == n1 + n2
+    assert day_n(legacy, "1h") == before_1h + n1 + n2
+    assert day_n(legacy, "1d") == before_1d + n1 + n2
+    with open(path) as f:
+        assert "partial" not in json.load(f)
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        {"1m": {"ttl": 5}},
+        {"2m": {"ttl_days": 5}},
+        {"1m": {"ttl_days": 0}},
+        {"1m": {"ttl_days": "30"}},
+        {"1m": 30},
+    ],
+)
+def test_incremental_run_rejects_malformed_tiers_cfg(spark, transcripts, tmp_path, bad):
+    """A malformed tiers_cfg fails before any merge commits (not with a
+    KeyError after the run already committed, or by silently skipping an
+    unknown tier's expiry)."""
+    store = RollupStore(spark, str(tmp_path / "s"))
+    with pytest.raises(ValueError, match="tiers_cfg"):
+        incremental_run(transcripts, store, SETTINGS, tiers_cfg=bad)
+    assert store.manifest.runs == [] and store.read_tier("1m") is None

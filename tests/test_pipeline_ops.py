@@ -355,6 +355,25 @@ def test_dedup_components_raises_on_non_convergence(spark):
     assert uf == out
 
 
+def test_dedup_components_plan_bounded_across_rounds(spark):
+    """The label loop truncates lineage every round: the result's plan is
+    the same size after 3 rounds as after 12 (a persisted-only loop nests
+    each generation twice, doubling the plan per round)."""
+    from tsprofiler_spark.operators.dedup import dedup_components
+
+    def plan_len(n):
+        nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+        chain = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+        )
+        out = dedup_components(nodes, chain, max_iterations=n + 1, small_graph_edges=0)
+        assert {r.keeper_id for r in out.collect()} == {0}
+        return len(out._jdf.queryExecution().optimizedPlan().toString())
+
+    short, long_ = plan_len(3), plan_len(12)
+    assert long_ <= short * 1.1, (short, long_)
+
+
 def test_uhash_sql_matches_bigint_affine(spark):
     """The Mersenne-fold SQL expression (uhash_sql) must equal the exact
     big-integer affine map (a*h + b) mod (2^61 - 1) for 60-bit inputs —

@@ -82,16 +82,50 @@ def test_tiers_bootstrap_single_exchange(spark, transcripts_path):
     writes straight from the aggregation output. Pinned so a refactor can't
     silently reintroduce the second full-size shuffle."""
     from tsprofiler_spark.operators.ingest import SERIES_COLS, derive_series
-    from tsprofiler_spark.plans.retention import _tier_partials
+    from tsprofiler_spark.operators.rollup import partials, tier_bucket
 
     t = spark.read.parquet(transcripts_path)
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     series = derive_series(t).repartition(n, *SERIES_COLS)
-    finest = _tier_partials(series, "1m").withColumn(
+    finest = partials(series, tier_bucket("1m")).withColumn(
         "day", F.date_format(F.date_trunc("day", "bucket_start"), "yyyy-MM-dd")
     )
     plan = _plan(finest)
     assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_staged_tier_write_shuffles_raw_series_once(spark, transcripts_path, tmp_path):
+    """All three tiers stage in ONE write whose union branches each start
+    from the batch's series-key exchange: the raw series is shuffled once
+    and the 1h/1d branches reuse that exchange (checked on the final
+    adaptive plan, after execution), both at bootstrap and when every
+    affected day already has committed versions to merge with."""
+    from tsprofiler_spark.plans.retention import (
+        batch_increments,
+        format_days,
+        merge_transcript_batch,
+        touched_days,
+    )
+    from tsprofiler_spark.plans.storage import RollupStore
+
+    t = spark.read.parquet(transcripts_path)
+    affected = format_days(t.agg(touched_days()).collect()[0][0])
+    store = RollupStore(spark, str(tmp_path / "s"))
+
+    def series_exchanges():
+        staged = store._staged_plan(batch_increments(t), affected)
+        staged.collect()
+        final = _plan(staged).split("== Initial Plan ==")[0]
+        lines = final.splitlines()
+        raw = [l for l in lines if "REPARTITION_BY_NUM" in l]
+        return (
+            sum("ReusedExchange" not in l for l in raw),
+            sum("ReusedExchange" in l for l in raw),
+        )
+
+    assert series_exchanges() == (1, 2)
+    merge_transcript_batch(t, store, "plan-1", "2999-01-01 00:00:00", affected=affected)
+    assert series_exchanges() == (1, 2)
 
 
 def test_registered_queries_have_no_cartesian_or_python_rows(spark):
@@ -174,3 +208,14 @@ def test_driver_contract_shape():
     assert set(aq) == set(q) | entry._DRIVER_EXCLUDED
     assert set(q).isdisjoint(entry._DRIVER_EXCLUDED)
     assert list(aq)[:50] == entry._DRIVER_ORDER
+
+
+@pytest.mark.parametrize("bad", ["Auto", "64k", ""])
+def test_profile_pipeline_rejects_unknown_segment_turns_string(
+    spark, transcripts_path, bad
+):
+    """Only the literal "auto" is a string mode; a misspelling fails at the
+    call instead of reaching the segmented operators as a str."""
+    t = spark.read.parquet(transcripts_path)
+    with pytest.raises(ValueError, match="segment_turns"):
+        profile_pipeline(t, SETTINGS, segment_turns=bad)

@@ -284,8 +284,8 @@ def test_streaming_ttl_expiry_and_late_resurrection(spark, transcripts, tmp_path
     (without it, TTLs silently never apply to pure-stream deployments).
     The full ADVICE scenario then runs stream-side: expiry drops a 1m day,
     two late micro-batches resurrect it — the coarse tiers must stay
-    additive through BOTH (durable partial flag + per-batch expiry both
-    re-arming the machinery)."""
+    additive through BOTH, with per-batch expiry re-dropping the
+    resurrected 1m day in between."""
     from pyspark.sql import functions as F
 
     cfg = {"1m": {"ttl_days": 1}, "1h": {"ttl_days": 365}, "1d": {"ttl_days": 365}}
@@ -310,10 +310,9 @@ def test_streaming_ttl_expiry_and_late_resurrection(spark, transcripts, tmp_path
     process_microbatch(late1, 1, store, tiers_cfg=cfg)
     process_microbatch(late2, 2, store, tiers_cfg=cfg)
     assert n_1h() == before + n1 + n2
-    # per-batch expiry re-dropped the resurrected (partial) 1m day: the day
-    # is older than the 1m TTL cutoff, so it never lingers past its batch
+    # per-batch expiry re-dropped the resurrected 1m day: the day is older
+    # than the 1m TTL cutoff, so it never lingers past its batch
     assert day not in store.manifest.tiers.get("1m", {})
-    assert day not in store.manifest.partial_days("1m")
 
 
 def test_idle_timeout_interval_parsing():
@@ -490,3 +489,22 @@ def test_distinct_streams_over_one_store_do_not_collide(spark, transcripts, tmp_
     # true replay (same stream, same batch) still a no-op
     assert process_microbatch(first, 0, store, stream_id="q1") == []
     assert store.read_tier("1m").agg(F.sum("n")).collect()[0][0] == n_after_q2
+
+
+def test_stream_entry_points_reject_malformed_tiers_cfg(spark, transcripts, tmp_path):
+    """process_microbatch checks tiers_cfg before its merge commits, and
+    start_rollup_stream before the query starts."""
+    bad = {"1m": {"ttl": 30}}
+    store = RollupStore(spark, str(tmp_path / "s"))
+    with pytest.raises(ValueError, match="tiers_cfg"):
+        process_microbatch(transcripts, 0, store, tiers_cfg=bad)
+    assert store.manifest.runs == [] and store.read_tier("1m") is None
+
+    inbox = str(tmp_path / "inbox")
+    os.makedirs(inbox)
+    with pytest.raises(ValueError, match="tiers_cfg"):
+        start_rollup_stream(
+            stream_transcripts(spark, inbox), store, SETTINGS,
+            str(tmp_path / "ckpt"), tiers_cfg={"1w": {"ttl_days": 7}},
+        )
+    assert not spark.streams.active

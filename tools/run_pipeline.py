@@ -152,8 +152,8 @@ def main() -> None:
             def do_profiles():
                 # run_profile inside the timing: it eagerly materializes the
                 # chunk table (the heavy scan->gap-fill->bucketize pass).
-                # Staged parquet, not an executor-heap cache: same reasoning
-                # that moved the tier cascade to staged parquet.
+                # Staged parquet, not an executor-heap cache: a deserialized
+                # cache of the chunk table costs executor heap and GC.
                 profile = run_profile(
                     transcripts, settings, do_gap_fill=True, step_seconds=60,
                     chunk_stage_dir=os.path.join(out_dir, "chunk_stage"),

@@ -44,24 +44,57 @@ def go_round_pct_sql(num: str, den: str) -> str:
     return go_round_sql(f"CAST({num} AS DOUBLE) / CAST({den} AS DOUBLE) * 100.0")
 
 
+def closest_bounds(states: int, vmin: float, vmax: float) -> list[tuple[float, float]]:
+    """The closest-discretizer's ``[lower, upper)`` bucket per state, bit-exact.
+
+    The same ``i*step ± 0.5*step`` doubles the kernel compares against
+    (kernel/discretize.py closest_discretize, utils/discretize.go:30-51).
+    Neighbouring buckets need not meet exactly: where ``upper_i`` and
+    ``lower_{i+1}`` round apart, the value between them matches no bucket
+    and falls back to state 0 (with 10 states over [0,128], 32.0 is such a
+    value), so no ``floor(v/step + 0.5)`` shortcut reproduces the kernel."""
+    step = float(vmax - vmin) / float(states)
+    return [
+        (float(i) * step - 0.5 * step, float(i) * step + 0.5 * step)
+        for i in range(states)
+    ]
+
+
+def _double_sql(x: float) -> str:
+    # exponent notation is a DOUBLE literal in Spark SQL and DuckDB alike;
+    # a plain decimal would parse as DECIMAL in DuckDB
+    r = repr(float(x))
+    return r if "e" in r else r + "e0"
+
+
 def closest_state(value: Column, states: int, vmin: float, vmax: float) -> Column:
     """Closest-state discretization with fixed bounds as a pure SQL formula.
 
-    Mirrors utils/discretize.go:30-51: buckets centered on ``i*step`` with
-    ``min`` intentionally NOT added; clamped to [0, states-1]. For values on
-    the grid this equals ``least(S-1, greatest(0, floor(v/step + 0.5)))``.
+    Mirrors utils/discretize.go:30-51 bit for bit: the first state whose
+    :func:`closest_bounds` bucket holds the value; at or above the top
+    bucket's upper bound the last state; otherwise (a gap between buckets,
+    below the first bucket, or NULL) state 0. The bounds are embedded as
+    exact double literals, so Spark and DuckDB evaluate the identical
+    comparisons.
     """
-    step = (vmax - vmin) / float(states)
-    raw = F.floor(value / F.lit(step) + F.lit(0.5))
-    return F.least(F.lit(states - 1), F.greatest(F.lit(0), raw)).cast("int")
+    bounds = closest_bounds(states, vmin, vmax)
+    out = F.when((value >= F.lit(bounds[0][0])) & (value < F.lit(bounds[0][1])), 0)
+    for i, (lo, hi) in enumerate(bounds[1:], start=1):
+        out = out.when((value >= F.lit(lo)) & (value < F.lit(hi)), i)
+    return out.when(value >= F.lit(bounds[-1][1]), states - 1).otherwise(0)
 
 
 def closest_state_sql(value_expr: str, states: int, vmin: float, vmax: float) -> str:
     """The same formula as ANSI SQL text (for DuckDB oracles and spark.sql)."""
-    step = (vmax - vmin) / float(states)
+    bounds = closest_bounds(states, vmin, vmax)
+    v = f"({value_expr})"
+    arms = " ".join(
+        f"WHEN {v} >= {_double_sql(lo)} AND {v} < {_double_sql(hi)} THEN {i}"
+        for i, (lo, hi) in enumerate(bounds)
+    )
     return (
-        f"CAST(LEAST({states - 1}, GREATEST(0, "
-        f"FLOOR(({value_expr}) / {step!r} + 0.5))) AS INT)"
+        f"CAST(CASE {arms} WHEN {v} >= {_double_sql(bounds[-1][1])} "
+        f"THEN {states - 1} ELSE 0 END AS INT)"
     )
 
 
@@ -114,8 +147,3 @@ def simple_state_sql(value_expr: str, states: int, vmin: float, vmax: float) -> 
 def series_key_cols() -> list[str]:
     """The series key: one profiled series per (conv_id, tool, role)."""
     return ["conv_id", "tool", "role"]
-
-
-def ident_expr(state_cols: list[Column]) -> Column:
-    """Dash-joined state-history ident (reference: utils/historyconvert.go:10-20)."""
-    return F.concat_ws("-", *[c.cast("string") for c in state_cols])

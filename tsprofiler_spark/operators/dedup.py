@@ -392,6 +392,16 @@ def dedup_components(
       alternating large-star/small-star contraction (Kiveris et al.,
       "Connected Components in MapReduce"), which bounds rounds at
       O(log n) under heavy skew — same output contract.
+      Every round's labels are ``localCheckpoint(eager=True)``-ed, which
+      truncates the lineage: a generation's plan nests the previous one
+      twice (join + neighbour-min branch), so a merely persisted plan
+      doubles per round and planning it exhausts the driver heap within
+      ~8 rounds. Local rather than a reliable ``checkpoint``: the labels
+      are the small touched-node sliver, a reliable checkpoint needs a
+      session-wide checkpoint dir the engine does not own, and the only
+      cost — an executor lost mid-loop fails the job instead of
+      recomputing the round — is repaired by a rerun (the loop has no
+      side effects).
     """
     if max_iterations < 1:
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
@@ -478,16 +488,14 @@ def dedup_components(
                 ),
             )
         )
-        new_labels.persist()
-        # full count (no limit-short-circuit) so this action also fills the
-        # new_labels cache completely before the old generation is dropped
+        # truncate the lineage every round (see the docstring)
+        new_labels = new_labels.localCheckpoint(eager=True)
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "doc_id")
             .where(F.col("n.comp") != F.col("o.comp"))
             .count()
         )
-        labels.unpersist()
         labels = new_labels
         if changed == 0:
             break
@@ -496,17 +504,13 @@ def dedup_components(
         # running out of rounds means some component's labels are still
         # intermediate — silently returning them would split components
         # into multiple "keepers" and dedup incorrectly
-        labels.unpersist()
         raise RuntimeError(
             f"dedup_components did not converge in {max_iterations} rounds: "
             f"{changed} labels still changing — a component's diameter "
             f"exceeds max_iterations; raise it (or use star-contraction at "
             f"this scale)"
         )
-    # NOTE: the returned DataFrame reads from the final persisted labels
-    # generation (unpersisting here would force a full loop-lineage
-    # recompute on first use); callers that run many resolutions in one
-    # session should materialize the result and clear the cache.
+    # the returned DataFrame reads the final checkpointed labels generation
     return _keeper_join(documents, labels)
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from tsprofiler_spark.config import Settings
 from tsprofiler_spark.functions import closest_state, go_round_nonneg
 from tsprofiler_spark.operators.ingest import SERIES_COLS
+from tsprofiler_spark.operators.rollup import value_partials
 
 
 def bucketize(
@@ -127,12 +128,8 @@ def chunk_stats(bucketed: DataFrame, settings: Settings) -> DataFrame:
     partially filled buffer at stream end).
     """
     agg = bucketed.groupBy(*SERIES_COLS, "metric", "bucket_idx").agg(
-        F.count("value").alias("n"),
-        F.sum("value").alias("s1"),
-        F.sum(F.col("value") * F.col("value")).alias("s2"),
+        *value_partials(),
         F.avg("value").alias("chunk_avg"),
-        F.min("value").alias("obs_min"),
-        F.max("value").alias("obs_max"),
         F.stddev_samp("value").alias("chunk_stddev"),
         F.min("ts").alias("bucket_start"),
         F.max("ts").alias("bucket_end"),
@@ -151,7 +148,7 @@ def chunk_stats(bucketed: DataFrame, settings: Settings) -> DataFrame:
     if settings.fix_bound:
         vmin, vmax = F.lit(settings.fixed_min), F.lit(settings.fixed_max)
     else:
-        vmin, vmax = F.col("obs_min"), F.col("obs_max")
+        vmin, vmax = F.col("vmin"), F.col("vmax")
 
     return agg.select(
         *SERIES_COLS,
@@ -384,8 +381,8 @@ def series_stats(chunks: DataFrame, settings: Settings) -> DataFrame:
     (population-style over cross terms, matching the reference formula).
     """
     # chunk_stats folds the fix_bound choice into bound_min/bound_max
-    # (== obs_min/obs_max when fix_bound is False) and drops the raw
-    # obs_* columns, so this works for both modes.
+    # (== the chunk's vmin/vmax when fix_bound is False) and drops the
+    # raw vmin/vmax columns, so this works for both modes.
     min_col = F.min("bound_min")
     max_col = F.max("bound_max")
     return chunks.groupBy(*SERIES_COLS, "metric").agg(

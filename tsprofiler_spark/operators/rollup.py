@@ -10,7 +10,7 @@ stddev_samp) so the identical ANSI SQL runs in the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from tsprofiler_spark.config import Settings
@@ -20,42 +20,51 @@ from tsprofiler_spark.operators.ingest import SERIES_COLS
 TIER_TRUNC = {"1m": "minute", "1h": "hour", "1d": "day"}
 # cascade order: each tier is computed from the previous (finer) one
 CASCADE = ["1m", "1h", "1d"]
+PARTIALS = ["n", "s1", "s2", "vmin", "vmax"]
 
 
-def rollup_from_series(series: DataFrame, tier: str, settings: Settings) -> DataFrame:
-    """raw observations -> finest time tier (one shuffle on the series key)."""
-    trunc = TIER_TRUNC[tier]
-    g = series.groupBy(
-        *SERIES_COLS, "metric", F.date_trunc(trunc, "ts").alias("bucket_start")
-    ).agg(
-        F.count("value").alias("n"),
-        F.sum("value").alias("s1"),
-        F.sum(F.col("value") * F.col("value")).alias("s2"),
-        F.min("value").alias("vmin"),
-        F.max("value").alias("vmax"),
-    )
-    return _finish_tier(g, tier, settings)
+def tier_bucket(tier: str, ts: str = "ts") -> Column:
+    """The ``bucket_start`` of tier ``tier`` for timestamp column ``ts``."""
+    return F.date_trunc(TIER_TRUNC[tier], ts).alias("bucket_start")
 
 
-def rollup_cascade(finer: DataFrame, tier: str, settings: Settings) -> DataFrame:
-    """finer tier partials -> coarser tier (never rescans raw; exact for the
-    distributive partials)."""
-    trunc = TIER_TRUNC[tier]
-    g = finer.groupBy(
-        *SERIES_COLS,
-        "metric",
-        F.date_trunc(trunc, "bucket_start").alias("bucket_start"),
-    ).agg(
+def value_partials() -> list[Column]:
+    """The mergeable partials of ``value``: count, sum, sum of squares,
+    min and max — the aggregate every tier bucket and chunk carries."""
+    v = F.col("value")
+    return [
+        F.count(v).alias("n"),
+        F.sum(v).alias("s1"),
+        F.sum(v * v).alias("s2"),
+        F.min(v).alias("vmin"),
+        F.max(v).alias("vmax"),
+    ]
+
+
+def partials(df: DataFrame, bucket: Column) -> DataFrame:
+    """Raw (series, metric, value) rows -> partials per (series, metric,
+    ``bucket``)."""
+    return df.groupBy(*SERIES_COLS, "metric", bucket).agg(*value_partials())
+
+
+def combine(df: DataFrame, bucket: Column) -> DataFrame:
+    """The ⊕ of partials rows per (series, metric, ``bucket``): n, s1 and
+    s2 sum, vmin takes the min and vmax the max. Associative and
+    commutative, so any split of the same values — finer buckets, a
+    committed version plus a late increment — combines to the same
+    partials (exactly, while the values are integers)."""
+    return df.groupBy(*SERIES_COLS, "metric", bucket).agg(
         F.sum("n").alias("n"),
         F.sum("s1").alias("s1"),
         F.sum("s2").alias("s2"),
         F.min("vmin").alias("vmin"),
         F.max("vmax").alias("vmax"),
     )
-    return _finish_tier(g, tier, settings)
 
 
-def _finish_tier(g: DataFrame, tier: str, settings: Settings) -> DataFrame:
+def finish(g: DataFrame, tier: str, settings: Settings) -> DataFrame:
+    """Partials -> a tier table: the partials plus avg, sample stddev and
+    the closest state of the average."""
     avg = F.col("s1") / F.col("n")
     # explicit sample-stddev formula so the DuckDB oracle matches bit-for-bit
     var = (F.col("s2") - F.col("s1") * F.col("s1") / F.col("n")) / (F.col("n") - 1)
@@ -65,11 +74,7 @@ def _finish_tier(g: DataFrame, tier: str, settings: Settings) -> DataFrame:
         "metric",
         F.lit(tier).alias("tier"),
         "bucket_start",
-        "n",
-        "s1",
-        "s2",
-        "vmin",
-        "vmax",
+        *PARTIALS,
         avg.alias("avg"),
         stddev.alias("stddev"),
         closest_state(avg, settings.states, settings.fixed_min, settings.fixed_max).alias(
@@ -78,9 +83,19 @@ def _finish_tier(g: DataFrame, tier: str, settings: Settings) -> DataFrame:
     )
 
 
+def rollup_from_series(series: DataFrame, tier: str, settings: Settings) -> DataFrame:
+    """raw observations -> finest time tier (one shuffle on the series key)."""
+    return finish(partials(series, tier_bucket(tier)), tier, settings)
+
+
+def rollup_cascade(finer: DataFrame, tier: str, settings: Settings) -> DataFrame:
+    """finer tier partials -> coarser tier (never rescans raw; exact for the
+    distributive partials)."""
+    return finish(combine(finer, tier_bucket(tier, "bucket_start")), tier, settings)
+
+
 def build_tiers(series: DataFrame, settings: Settings) -> dict[str, DataFrame]:
-    """The cascade raw->1m->1h->1d. Returned lazily; caller persists each
-    tier before cascading in production (plans/retention.py does)."""
+    """The cascade raw->1m->1h->1d, returned lazily."""
     tiers: dict[str, DataFrame] = {}
     finer = rollup_from_series(series, "1m", settings)
     tiers["1m"] = finer

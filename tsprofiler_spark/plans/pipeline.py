@@ -98,7 +98,7 @@ def profile_pipeline(
       bucketed intermediate — reference A25). No executor-heap cache, so
       a small cluster is not penalized by GC the way a deserialized
       MEMORY_AND_DISK cache penalizes it (same reasoning that moved the
-      tier cascade to staged parquet).
+      tier merge free of executor-heap caches).
     * ``cache_chunks`` (default, used when no stage dir is given):
       persist + eager count(). The persisted handle is returned as
       ``stages["chunks"]``; callers that build many pipelines in one
@@ -110,6 +110,10 @@ def profile_pipeline(
     """
     if segment_turns == "auto":
         segment_turns = auto_segment_turns(transcripts, auto_segment_rows)
+    elif isinstance(segment_turns, str):
+        raise ValueError(
+            f"segment_turns must be 'auto', an int or None, got {segment_turns!r}"
+        )
     stages: dict[str, DataFrame] = {}
     t = transcripts
 

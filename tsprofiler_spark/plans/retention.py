@@ -2,10 +2,15 @@
 
 Each run reads only rows with ``ts > manifest.watermark`` (on Iceberg:
 incremental snapshot read; here: predicate pushed to the parquet scan),
-computes the finest-tier partials once, cascades coarser tiers from those
-partials, MERGEs each tier, applies TTL expiry, and commits the checkpoint
-manifest with per-partition lineage. Killing the job between tiers and
-re-running is safe: MERGE is idempotent and the manifest commits last.
+computes the batch's 1m partials once (the increment), and stages every
+tier in one write under one merge rule: each affected tier day becomes its
+committed version ⊕ the increment combined to that tier
+(`RollupStore._merged_tier_plan`). Sums, min and max compose, so the rule
+is exact for new, late, TTL-resurrected and replayed days alike. TTL
+expiry follows, and the checkpoint manifest commits last with per-partition
+lineage. Killing the job before the commit and re-running is safe: staged
+versions stay invisible and the replay re-stages them from the same
+committed base.
 """
 
 from __future__ import annotations
@@ -17,35 +22,14 @@ from pyspark.sql import functions as F
 
 from tsprofiler_spark.config import DEFAULT_TIERS, Settings
 from tsprofiler_spark.operators.ingest import SERIES_COLS, derive_series
-from tsprofiler_spark.operators.rollup import TIER_TRUNC
+from tsprofiler_spark.operators.rollup import (
+    CASCADE,
+    TIER_TRUNC,
+    combine,
+    partials,
+    tier_bucket,
+)
 from tsprofiler_spark.plans.storage import RollupStore
-
-
-def _tier_partials(series: DataFrame, tier: str) -> DataFrame:
-    trunc = TIER_TRUNC[tier]
-    return series.groupBy(
-        *SERIES_COLS, "metric", F.date_trunc(trunc, "ts").alias("bucket_start")
-    ).agg(
-        F.count("value").alias("n"),
-        F.sum("value").alias("s1"),
-        F.sum(F.col("value") * F.col("value")).alias("s2"),
-        F.min("value").alias("vmin"),
-        F.max("value").alias("vmax"),
-    )
-
-
-def _cascade_partials(finer: DataFrame, tier: str) -> DataFrame:
-    trunc = TIER_TRUNC[tier]
-    return finer.groupBy(
-        *SERIES_COLS, "metric",
-        F.date_trunc(trunc, "bucket_start").alias("bucket_start"),
-    ).agg(
-        F.sum("n").alias("n"),
-        F.sum("s1").alias("s1"),
-        F.sum("s2").alias("s2"),
-        F.min("vmin").alias("vmin"),
-        F.max("vmax").alias("vmax"),
-    )
 
 
 def touched_days() -> F.Column:
@@ -66,6 +50,64 @@ def format_days(days) -> list[str]:
     return [d.isoformat() for d in days or []]
 
 
+def check_tiers_cfg(tiers_cfg: dict) -> dict:
+    """Validate a retention tier config (the shape of
+    ``config.DEFAULT_TIERS``): every tier is a known one and maps to a dict
+    with a positive int ``ttl_days``. Called before any merge commits, so a
+    malformed config fails at the call, not mid-stream after a commit."""
+    if not isinstance(tiers_cfg, dict):
+        raise ValueError(f"tiers_cfg must be a dict, got {type(tiers_cfg).__name__}")
+    for tier, cfg in tiers_cfg.items():
+        if tier not in DEFAULT_TIERS:
+            raise ValueError(
+                f"tiers_cfg: unknown tier {tier!r}; known: {sorted(DEFAULT_TIERS)}"
+            )
+        ttl = cfg.get("ttl_days") if isinstance(cfg, dict) else None
+        if not isinstance(ttl, int) or isinstance(ttl, bool) or ttl <= 0:
+            raise ValueError(
+                f"tiers_cfg[{tier!r}] needs a positive int 'ttl_days', got {cfg!r}"
+            )
+    return tiers_cfg
+
+
+def expire_tiers(store: RollupStore, tiers_cfg: dict) -> dict[str, list[str]]:
+    """TTL expiry of every stored tier in ``tiers_cfg`` (already checked by
+    `check_tiers_cfg`); returns the dropped days per tier. A manifest
+    day-list scan and a pointer commit per tier — no Spark job."""
+    return {
+        tier: store.expire(tier, cfg["ttl_days"])
+        for tier, cfg in tiers_cfg.items()
+        if tier in TIER_TRUNC
+    }
+
+
+def batch_increments(transcripts: DataFrame) -> dict[str, DataFrame]:
+    """The batch's partials per tier: its 1m partials (the increment), and
+    the increment combined to every coarser tier.
+
+    The raw series rows are hash-distributed by the series key ONCE. Every
+    tier's groupBy clusters on a superset of the series columns, so that
+    partitioning already satisfies them (no aggregation exchange), the
+    three union branches of the staged write reuse the one exchange, and
+    the write runs straight from the aggregation output
+    (``merge_tiers(distribute=False)``). Staged files are
+    conversation-colocated as a result.
+
+    Skew note: one task owns a whole conversation-series — the same
+    per-conv concentration every gap-fill/bucketize window in the engine
+    already has; for pathological single-hot-series corpora the segmented
+    variants (operators/ingest.py gap_fill_segmented, bucketize_segmented)
+    are the documented salting fallback.
+    """
+    n_shuffle = int(transcripts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    series = derive_series(transcripts).repartition(n_shuffle, *SERIES_COLS)
+    inc = partials(series, tier_bucket("1m"))
+    return {
+        tier: inc if tier == "1m" else combine(inc, tier_bucket(tier, "bucket_start"))
+        for tier in CASCADE
+    }
+
+
 def merge_transcript_batch(
     transcripts: DataFrame,
     store: RollupStore,
@@ -80,11 +122,13 @@ def merge_transcript_batch(
     ``foreachBatch`` path (streaming/ingest.py) — identical semantics by
     construction, which is what the stream-vs-batch equality test pins.
 
-    Exactly-once under at-least-once replay: a previously committed
-    ``run_id`` is skipped outright; a crash mid-batch leaves only staged
-    (invisible) day versions, and the replay re-stages them idempotently
-    from the same committed base snapshot before the single
-    ``commit_run`` publishes all three tiers + the watermark atomically.
+    All three tiers stage in one write job from the batch's increments
+    (`batch_increments`) under the one merge rule, then one ``commit_run``
+    publishes them and the watermark atomically. Exactly-once under
+    at-least-once replay: a previously committed ``run_id`` is skipped
+    outright; a crash mid-batch leaves only staged (invisible) day
+    versions, and the replay re-stages them idempotently from the same
+    committed base.
 
     ``affected`` (touched day partitions) is normally folded into the
     caller's existing watermark aggregation (one job); when absent it is
@@ -94,123 +138,10 @@ def merge_transcript_batch(
         return []  # replayed micro-batch / re-run — already committed
     if affected is None:
         affected = format_days(transcripts.agg(touched_days()).collect()[0][0])
-    series = derive_series(transcripts)
-    # ONE exchange for the whole finest-tier stage: hash-distribute the raw
-    # series rows by the series key ONCE. The 1m groupBy clusters on a
-    # SUPERSET of (series cols), so hash partitioning on the subset already
-    # satisfies its required distribution (EnsureRequirements inserts no
-    # second exchange), and the staged write below runs straight from the
-    # aggregation output (merge_tiers distribute=False). The previous shape
-    # shuffled the same ~raw-sized row count twice — partials aggregation,
-    # then a write repartition — and at minute granularity the map-side
-    # combine saved almost nothing (every turn is its own bucket), so this
-    # halves the stage's exchange volume outright. Bonus: staged files are
-    # conversation-colocated, which is what lets the 1h cascade's map-side
-    # combine collapse 60:1 before its (tiny) shuffle.
-    #
-    # Skew note: one task now owns a whole conversation-series — the same
-    # per-conv concentration every gap-fill/bucketize window in the engine
-    # already has; for pathological single-hot-series corpora the segmented
-    # variants (operators/ingest.py gap_fill_segmented, bucketize_segmented)
-    # are the documented salting fallback.
-    spark = transcripts.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    series = series.repartition(n_shuffle, *SERIES_COLS)
-    # Two-step staging, ZERO large executor-memory caches: the finest (1m)
-    # partials go raw-scan -> groupBy -> staged parquet in one write job,
-    # then the 1h/1d cascades read that STAGED PARQUET back (columnar,
-    # compressed — storage is the materialization, exactly what cascading
-    # from a real Iceberg 1m table does). Caching 40M+ deserialized partial
-    # rows in the executor heap instead measurably throttles the N-executor
-    # configuration (spill + GC) without saving any scan of the raw data.
-    finest = _tier_partials(series, "1m")
     lineage, pointers = store.merge_tiers(
-        {"1m": finest}, run_id, affected=affected, distribute=False
+        batch_increments(transcripts), run_id, affected, distribute=False
     )
-    staged_1m = store.read_versions("1m", pointers["1m"])
-    # Days whose 1m content is INCOMPLETE (TTL-resurrected): a late row for
-    # a day already expired out of 1m (tier TTLs differ — 1m 30d vs 1h 180d
-    # / 1d 10y) stages a 1m day holding ONLY late rows, and a full 1h/1d
-    # replace would destroy the surviving long-TTL history for that day.
-    # Two sources, both needed:
-    #   * freshly resurrected this batch: no committed 1m version but a
-    #     coarser tier still holds the day;
-    #   * flagged `partial` in the manifest by an EARLIER late batch — the
-    #     1m day IS committed now, but still lacks the expired history, so
-    #     pointer presence alone would wrongly route it to the replace path
-    #     and rebuild 1h/1d from late rows only (the flag is durable for
-    #     exactly this: the streaming path never re-expires between
-    #     batches, so without it the second late batch for a day silently
-    #     destroyed the coarse rollup).
-    # Both sets are read from the manifest BEFORE commit_run, so a
-    # crash-replay of this run_id stages the identical plan. Pinned by
-    # test_late_row_after_1m_expiry / test_second_late_batch_after_expiry.
-    committed_1m = store.manifest.tiers.get("1m") or {}
-    committed_coarse = set(store.manifest.tiers.get("1h") or {}) | set(
-        store.manifest.tiers.get("1d") or {}
-    )
-    partial_1m = store.manifest.partial_days("1m")
-    # Both conditions require a SURVIVING coarse version: a partial-flagged
-    # day whose 1h/1d pointers are gone (e.g. a selective coarse-tier
-    # expire) has nothing to preserve — the replace path cascading the
-    # COMPLETE staged 1m day is then exactly right (additive-increment
-    # would rebuild the coarse day from only this batch's rows, dropping
-    # earlier late batches still committed in 1m). Brand-new days (in no
-    # tier yet) stay on the replace fast path for the same reason.
-    resurrected = [
-        d
-        for d in affected
-        if d in committed_coarse and (d not in committed_1m or d in partial_1m)
-    ]
-    # Cascade source per day class:
-    #   * replaced days — the staged (complete) 1m day content;
-    #   * FRESHLY resurrected days (no committed 1m version) — also the
-    #     staged content: with nothing merged in, it IS this batch's
-    #     increment, and the columnar staged parquet is cheaper than
-    #     re-aggregating the raw batch;
-    #   * flagged partial days (committed 1m, incomplete) — ONLY THIS
-    #     BATCH'S increment (`finest`): the staged day also contains
-    #     earlier late batches' rows, which the additive fold already
-    #     merged into 1h/1d — cascading the staged content again would
-    #     double-count them.
-    flagged = [d for d in resurrected if d in committed_1m]
-    if flagged:
-        day_of = F.date_format(F.date_trunc("day", "bucket_start"), "yyyy-MM-dd")
-        cascade_src = staged_1m.drop("day").where(
-            ~day_of.isin(flagged)
-        ).unionByName(finest.where(day_of.isin(flagged)))
-    else:
-        cascade_src = staged_1m.drop("day")
-    # 1d cascades from the 1h partials (not from 1m): sums/min/max compose,
-    # and the 1h->1d re-aggregation reads 60x fewer rows. The 1h partials
-    # table is tiny (one row per series-hour), so IT is worth a pinned
-    # cache to keep the 1d branch from re-reading the 1m files.
-    coarse_1h = _cascade_partials(cascade_src, "1h").persist()
-    coarse_1h.count()  # pin eagerly: both union branches below consume it
-    coarse_1d = _cascade_partials(coarse_1h, "1d")
-    # replace=True: for non-resurrected days the cascade source is the
-    # staged 1m day's COMPLETE merged content, so the cascaded 1h/1d
-    # partials are full day replacements — no union with the existing
-    # 1h/1d needed (and unioning would double-count exactly the
-    # previously merged data). Resurrected days keep merge semantics
-    # (``merge_days``): their cascaded increment folds ADDITIVELY into
-    # the existing 1h/1d day, preserving the long-TTL rollup.
-    tier_lineage, tier_ptrs = store.merge_tiers(
-        {"1h": coarse_1h, "1d": coarse_1d},
-        run_id,
-        affected=affected,
-        replace=True,
-        merge_days=resurrected,
-    )
-    lineage += tier_lineage
-    pointers.update(tier_ptrs)
-    coarse_1h.unpersist()
-    # the resurrected days' new 1m versions still lack the expired history:
-    # flag them durably IN THE SAME atomic manifest commit
-    store.commit_run(
-        run_id, watermark, lineage, pointers,
-        partial_days={"1m": resurrected} if resurrected else None,
-    )
+    store.commit_run(run_id, watermark, lineage, pointers)
     return lineage
 
 
@@ -222,7 +153,7 @@ def incremental_run(
     expire: bool = True,
 ) -> dict:
     """One resumable incremental run. Returns run stats."""
-    tiers_cfg = tiers_cfg or DEFAULT_TIERS
+    tiers_cfg = check_tiers_cfg(tiers_cfg or DEFAULT_TIERS)
 
     wm = store.manifest.watermark
     new = transcripts
@@ -248,8 +179,6 @@ def incremental_run(
     )
 
     if expire:
-        for tier, cfg in tiers_cfg.items():
-            if tier in TIER_TRUNC:
-                store.expire(tier, cfg["ttl_days"])
+        expire_tiers(store, tiers_cfg)
 
     return {"run_id": run_id, "new_rows": n_new, "partitions": lineage}

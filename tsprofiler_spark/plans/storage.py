@@ -35,9 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsprofiler_spark.operators.ingest import SERIES_COLS
+from tsprofiler_spark.operators.rollup import PARTIALS, combine, tier_bucket
 
 TIER_KEY = SERIES_COLS + ["metric", "bucket_start"]
-PARTIALS = ["n", "s1", "s2", "vmin", "vmax"]
 
 
 LINEAGE_KEEP = 256  # full per-day lineage kept for the most recent N runs
@@ -56,16 +56,6 @@ class Manifest:
     # per compacted id the manifest stays small, whereas unbounded full
     # lineage (per-day partition records) grew it without limit.
     compacted_run_ids: list = field(default_factory=list)
-    # tier -> sorted list of days whose committed content is INCOMPLETE
-    # (a TTL-resurrected day holds only late rows, not the expired
-    # history). Durable because the incompleteness outlives the batch that
-    # created it: a SECOND late batch for the same day must keep additive
-    # merge semantics toward the coarser tiers — re-deriving "resurrected"
-    # from pointer presence alone would see the day committed and take the
-    # replace path, rebuilding the 1h/1d day from late rows only and
-    # silently destroying the surviving long-TTL rollup. The flag clears
-    # when the day TTL-expires out of the tier again (drop_days).
-    partial: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:
         self._run_ids = set(self.compacted_run_ids)
@@ -73,6 +63,9 @@ class Manifest:
 
     @staticmethod
     def load(path: str) -> "Manifest":
+        """Keys this version does not know are ignored, and the next save
+        drops them: manifests written before the single merge rule carry
+        a per-day ``partial`` flag the rule no longer needs."""
         if os.path.exists(path):
             with open(path) as f:
                 d = json.load(f)
@@ -82,16 +75,11 @@ class Manifest:
                 runs=d.get("runs", []),
                 tiers=d.get("tiers", {}),
                 compacted_run_ids=d.get("compacted_run_ids", []),
-                partial=d.get("partial", {}),
             )
         return Manifest(path=path)
 
     def has_run(self, run_id: str) -> bool:
         return run_id in self._run_ids
-
-    def partial_days(self, tier: str) -> set[str]:
-        """Days committed in ``tier`` with INCOMPLETE content (see `partial`)."""
-        return set(self.partial.get(tier, []))
 
     def _save(self) -> None:
         tmp = self.path + ".tmp"
@@ -103,7 +91,6 @@ class Manifest:
                     "runs": self.runs,
                     "tiers": self.tiers,
                     "compacted_run_ids": self.compacted_run_ids,
-                    "partial": self.partial,
                 },
                 f,
                 indent=1,
@@ -116,11 +103,8 @@ class Manifest:
         watermark: str,
         partitions: list[dict],
         pointers: dict[str, dict[str, str]] | None = None,
-        partial_days: dict[str, list[str]] | None = None,
     ) -> None:
-        """Single atomic commit: watermark + lineage + tier snapshot pointers
-        (+ newly-partial day flags, committed in the SAME atomic save so a
-        crash can never publish a resurrected day without its flag)."""
+        """Single atomic commit: watermark + lineage + tier snapshot pointers."""
         self.watermark = watermark
         self.runs.append(
             {
@@ -135,24 +119,13 @@ class Manifest:
             self.compacted_run_ids.append(self.runs.pop(0)["run_id"])
         for tier, days in (pointers or {}).items():
             self.tiers.setdefault(tier, {}).update(days)
-        for tier, days in (partial_days or {}).items():
-            if days:
-                self.partial[tier] = sorted(set(self.partial.get(tier, [])) | set(days))
         self._save()
 
     def drop_days(self, tier: str, days: list[str]) -> None:
-        """Commit a TTL expiry (pointer removal) before any dir deletion.
-        A dropped day's `partial` flag clears with it: once the incomplete
-        version is gone, the next late row re-resurrects from scratch."""
+        """Commit a TTL expiry (pointer removal) before any dir deletion."""
         t = self.tiers.get(tier, {})
         for d in days:
             t.pop(d, None)
-        if tier in self.partial:
-            keep = [d for d in self.partial[tier] if d not in set(days)]
-            if keep:
-                self.partial[tier] = keep
-            else:
-                del self.partial[tier]
         self._save()
 
 
@@ -205,68 +178,68 @@ class RollupStore:
         return self.read_versions(tier, pointers)
 
     def _merged_tier_plan(
-        self,
-        new_partials: DataFrame,
-        tier: str,
-        affected: list[str],
-        replace: bool = False,
-        merge_days: list[str] | None = None,
+        self, inc: DataFrame, tier: str, affected: list[str]
     ) -> DataFrame:
-        """MERGE plan for one tier against its committed snapshot.
+        """The one merge rule, for tier T and every affected day d:
 
-        Associative combine: n/s1/s2 sum, vmin min, vmax max — so
-        late/duplicate windows fold exactly, and re-staging the same input
-        (replay with the same run_id) overwrites the same version dirs
-        byte-identically.
+            new_T(d) = base_T(d) ⊕ inc
 
-        ``replace``: the partials are already the COMPLETE content of every
-        affected day (e.g. cascaded from a tier whose affected-day versions
-        were just merged) — skip the existing-union entirely; the staged
-        day version simply supersedes the old one.
+        ``inc`` is the batch's increment already combined to T's buckets,
+        and ⊕ is `operators.rollup.combine`. base_T(d) is T's committed
+        version of d. Where T holds none it is the committed 1m version of
+        d combined to T (a 1m day whose coarse pointers were dropped), and
+        where 1m holds none either it is empty: a new day, or a day
+        already expired from 1m — its coarse history lives on in T's own
+        version, so only the increment folds in. Every day class (new,
+        committed, late, TTL-resurrected, replayed) takes this one path.
 
-        ``merge_days``: exception list for ``replace=True`` — days whose
-        partials are NOT complete (the finer tier had no committed version
-        to fold the day's history from, e.g. a late row for a day already
-        TTL-expired out of 1m while 1h/1d still retain it). Those days keep
-        the existing-union semantics so the longer-TTL rollup is preserved
-        instead of silently replaced by the late rows alone.
+        Only the affected days' versions are read — the manifest is the
+        partition index — so late data for a 10y-old 1d day opens one day
+        dir, not the tier. Re-staging the same input from the same
+        committed base (a replay with the same run_id) rewrites the same
+        version dirs byte-identically.
         """
-        new_partials = new_partials.withColumn(
+        committed = self.manifest.tiers.get(tier) or {}
+        finest = self.manifest.tiers.get("1m") or {}
+        own = {d: committed[d] for d in affected if d in committed}
+        fallback = {d: finest[d] for d in affected if d not in committed and d in finest}
+        merged = inc.select(*TIER_KEY, *PARTIALS)
+        if own or fallback:
+            if own:
+                merged = merged.unionByName(
+                    self.read_versions(tier, own).select(*TIER_KEY, *PARTIALS)
+                )
+            if fallback:
+                merged = merged.unionByName(combine(
+                    self.read_versions("1m", fallback),
+                    tier_bucket(tier, "bucket_start"),
+                ).select(*TIER_KEY, *PARTIALS))
+            merged = combine(merged, F.col("bucket_start"))
+        # with no base the increment is already one row per key: a
+        # re-aggregation would be an identity shuffle, so it is skipped
+        return merged.withColumn(
             "day", F.date_format(F.date_trunc("day", "bucket_start"), "yyyy-MM-dd")
         )
-        union_days = list(merge_days or []) if replace else list(affected)
-        # Read ONLY the union days' committed versions — the manifest is the
-        # partition index, so this opens a handful of day dirs instead of
-        # scanning the whole tier (a full-history read of the 10y 1d tier to
-        # recover one resurrected day was the measured worst case).
-        committed = self.manifest.tiers.get(tier) or {}
-        pointers = {d: v for d, v in committed.items() if d in set(union_days)}
-        if not pointers:
-            # bootstrap load (or pure replace): partials come out of a
-            # groupBy on exactly (TIER_KEY, bucket day) — already one row
-            # per key, so the merge re-aggregation would be an identity
-            # shuffle of the full tier; skip it.
-            return new_partials.select(*TIER_KEY, *PARTIALS, "day")
-        combined = new_partials.select(*TIER_KEY, *PARTIALS, "day")
-        old = self.read_versions(tier, pointers).select(
-            *TIER_KEY, *PARTIALS, "day"
-        )
-        return combined.unionByName(old).groupBy(*TIER_KEY, "day").agg(
-            F.sum("n").alias("n"),
-            F.sum("s1").alias("s1"),
-            F.sum("s2").alias("s2"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-        )
+
+    def _staged_plan(
+        self, partials_by_tier: dict[str, DataFrame], affected: list[str]
+    ) -> DataFrame:
+        """Every tier's merged plan, unioned into the one staged write."""
+        plans = [
+            self._merged_tier_plan(df, tier, affected).withColumn("tier", F.lit(tier))
+            for tier, df in partials_by_tier.items()
+        ]
+        merged = plans[0]
+        for p in plans[1:]:
+            merged = merged.unionByName(p)
+        return merged
 
     def merge_tiers(
         self,
         partials_by_tier: dict[str, DataFrame],
         run_id: str,
-        affected: list[str] | None = None,
-        replace: bool = False,
+        affected: list[str],
         distribute: bool = True,
-        merge_days: list[str] | None = None,
     ) -> tuple[list[dict], dict[str, dict[str, str]]]:
         """Stage the MERGE of EVERY tier's partials as new day versions in
         ONE write job (NOT yet visible — the caller publishes atomically via
@@ -274,35 +247,18 @@ class RollupStore:
 
         All tiers union into a single (tier, day)-partitioned write instead
         of one write job per tier: at cluster scale this is one shuffle +
-        one commit pipeline instead of three job barriers, and in the
-        scaling harness it removes two rounds of driver round-trips per
-        batch. Write-then-swap: the job lands in a staging dir, then one
-        rename per (tier, day) into the versioned location (the sandbox
-        analogue of an Iceberg multi-table snapshot commit).
+        one commit pipeline instead of three job barriers. Write-then-swap:
+        the job lands in a staging dir, then one rename per (tier, day)
+        into the versioned location (the sandbox analogue of an Iceberg
+        multi-table snapshot commit).
 
-        ``affected`` (the touched yyyy-MM-dd day partitions) can be passed
-        in when the caller already knows it — the set is identical for
-        every tier of one batch (day truncation of the same bucket range).
+        ``affected`` is the set of touched yyyy-MM-dd day partitions —
+        identical for every tier of one batch (day truncation of the same
+        bucket range).
 
         Returns (lineage, pointers) with pointers = {tier: {day: run_id}}.
         """
-        if affected is None:
-            days = None
-            for df in partials_by_tier.values():
-                d = df.select(
-                    F.date_format(F.date_trunc("day", "bucket_start"), "yyyy-MM-dd").alias("day")
-                ).distinct()
-                days = d if days is None else days.union(d)
-            affected = [r.day for r in days.distinct().collect()]
-        plans = [
-            self._merged_tier_plan(
-                df, tier, affected, replace=replace, merge_days=merge_days
-            ).withColumn("tier", F.lit(tier))
-            for tier, df in partials_by_tier.items()
-        ]
-        merged = plans[0]
-        for p in plans[1:]:
-            merged = merged.unionByName(p)
+        merged = self._staged_plan(partials_by_tier, affected)
         # ONE write job, NO executor-memory cache of the merged data: the
         # staged parquet itself is the materialization (columnar, compressed
         # — a fraction of a deserialized JVM cache, and what an Iceberg
@@ -319,12 +275,11 @@ class RollupStore:
         # ``distribute=False``: the caller guarantees the partials are
         # already hash-distributed across ~shuffle.partitions tasks (e.g.
         # retention pre-partitions the raw series by the series key, which
-        # the 1m groupBy then reuses) — writing directly saves a FULL
-        # second shuffle of the merged tier, the single largest exchange in
-        # the job at finest-tier scale. Each task then writes one file per
-        # (tier, day) dir it holds rows for; with the series-key layout a
-        # conversation's rows stay colocated in one file, which is exactly
-        # what lets the 1h/1d cascade's map-side combine collapse 60:1.
+        # every tier's groupBy then reuses) — writing directly saves a FULL
+        # second shuffle of the merged tiers, the single largest exchange
+        # in the job at finest-tier scale. Each task then writes one file
+        # per (tier, day) dir it holds rows for, with a conversation's rows
+        # colocated in one file.
         # Sort within partitions by the full segment key + time. The dynamic
         # partitionBy write needs a local sort on (tier, day) anyway (one
         # open writer per dir); widening it to the series key and
@@ -399,24 +354,12 @@ class RollupStore:
         shutil.rmtree(staging, ignore_errors=True)
         return lineage, pointers
 
-    def merge_tier(
-        self,
-        new_partials: DataFrame,
-        tier: str,
-        run_id: str,
-        affected: list[str] | None = None,
-    ) -> tuple[list[dict], dict[str, str]]:
-        """Single-tier convenience wrapper over `merge_tiers`."""
-        lineage, pointers = self.merge_tiers({tier: new_partials}, run_id, affected)
-        return lineage, pointers.get(tier, {})
-
     def commit_run(
         self,
         run_id: str,
         watermark: str,
         lineage: list[dict],
         pointers: dict[str, dict[str, str]],
-        partial_days: dict[str, list[str]] | None = None,
     ) -> None:
         """Atomically publish every staged tier version + watermark, then GC
         superseded version dirs (safe post-commit: readers only follow the
@@ -424,9 +367,7 @@ class RollupStore:
         old = {
             tier: dict(self.manifest.tiers.get(tier, {})) for tier in pointers
         }
-        self.manifest.record_run(
-            run_id, watermark, lineage, pointers, partial_days=partial_days
-        )
+        self.manifest.record_run(run_id, watermark, lineage, pointers)
         for tier, days in pointers.items():
             for day, ver in days.items():
                 prev = old.get(tier, {}).get(day)

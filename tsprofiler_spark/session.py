@@ -13,7 +13,26 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Sized from the host, not from constants: the CPUs this process may run
+# on, and a driver heap of about half the physical memory. local[N] runs
+# every executor inside the driver JVM, so the heap is the whole engine's
+# memory; the other half is left to the Python workers, the page cache and
+# the OS (a heap sized past physical memory on a host without swap grows
+# until the kernel kills the JVM). Capped at 32g, beyond which compressed
+# object pointers switch off. SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM override.
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
+
+
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEM``, else half of physical memory in whole GiB
+    (at least 1g, at most 32g)."""
+    if os.environ.get("SPARK_DRIVER_MEM"):
+        return os.environ["SPARK_DRIVER_MEM"]
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(32, max(1, total // 2 >> 30))}g"
+
 
 # glibc malloc tuning for the Arrow/numpy hot path (codec encode, pandas
 # UDFs): by default glibc serves >128 KB allocations with mmap and returns
@@ -83,7 +102,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for var, val in _MALLOC_ENV.items():

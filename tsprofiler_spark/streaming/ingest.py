@@ -40,7 +40,13 @@ from pyspark.sql.types import (
 )
 
 from tsprofiler_spark.config import Settings
-from tsprofiler_spark.plans.retention import merge_transcript_batch
+from tsprofiler_spark.plans.retention import (
+    check_tiers_cfg,
+    expire_tiers,
+    format_days,
+    merge_transcript_batch,
+    touched_days,
+)
 from tsprofiler_spark.plans.storage import RollupStore
 
 TRANSCRIPTS_SCHEMA = StructType(
@@ -113,19 +119,19 @@ def process_microbatch(
     old stream at an idle point (no in-flight batch), then restart on the
     new scheme.
 
-    ``tiers_cfg``: when given (same shape as config.DEFAULT_TIERS), run
-    TTL expiry after each committed merge — the batch-incremental job does
-    this every run, but a STREAMING-ONLY store otherwise never expires:
-    its TTLs silently don't apply, and the 1m tier grows past its
-    retention forever. Expiry after the merge is also what re-arms the
-    resurrected-day machinery (an expired day's next late row recreates a
-    flagged partial 1m day). Cheap: a manifest day-list scan + pointer
+    ``tiers_cfg``: when given (same shape as config.DEFAULT_TIERS, checked
+    before the merge), run TTL expiry after each committed merge — the
+    batch-incremental job does this every run, but a STREAMING-ONLY store
+    otherwise never expires: its TTLs silently don't apply, and the 1m
+    tier grows past its retention forever. A late row for a day expired
+    from 1m needs nothing special: the merge rule folds it into the day's
+    surviving 1h/1d versions. Cheap: a manifest day-list scan + pointer
     commit; no Spark job."""
+    if tiers_cfg:
+        check_tiers_cfg(tiers_cfg)
     if batch.isEmpty():
         return []
     from pyspark.sql import functions as F
-
-    from tsprofiler_spark.plans.retention import format_days, touched_days
 
     run_id = f"{stream_id}-{batch_id}"
     if store.manifest.has_run(run_id):
@@ -148,11 +154,7 @@ def process_microbatch(
         batch, store, run_id, watermark, affected=affected
     )
     if tiers_cfg:
-        from tsprofiler_spark.operators.rollup import TIER_TRUNC
-
-        for tier, cfg in tiers_cfg.items():
-            if tier in TIER_TRUNC:
-                store.expire(tier, cfg["ttl_days"])
+        expire_tiers(store, tiers_cfg)
     return lineage
 
 
@@ -184,6 +186,8 @@ def start_rollup_stream(
     """
     import uuid
 
+    if tiers_cfg:
+        check_tiers_cfg(tiers_cfg)
     stream_id = "stream-" + uuid.uuid5(
         uuid.NAMESPACE_URL, os.path.abspath(checkpoint_dir)
     ).hex[:12]

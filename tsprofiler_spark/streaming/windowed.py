@@ -33,8 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tsprofiler_spark.config import Settings
-from tsprofiler_spark.operators.ingest import SERIES_COLS, derive_series
-from tsprofiler_spark.operators.rollup import _finish_tier
+from tsprofiler_spark.operators.ingest import derive_series
+from tsprofiler_spark.operators.rollup import finish, partials
 
 
 def stream_rollup_1m(
@@ -47,25 +47,11 @@ def stream_rollup_1m(
     Output schema matches the batch 1m tier exactly (tier, bucket_start,
     n/s1/s2/vmin/vmax, avg, stddev, state).
     """
-    series = derive_series(transcripts_stream)
-    g = (
-        series.withWatermark("ts", watermark_delay)
-        .groupBy(
-            *SERIES_COLS,
-            "metric",
-            F.window("ts", "1 minute").alias("win"),
-        )
-        .agg(
-            F.count("value").alias("n"),
-            F.sum("value").alias("s1"),
-            F.sum(F.col("value") * F.col("value")).alias("s2"),
-            F.min("value").alias("vmin"),
-            F.max("value").alias("vmax"),
-        )
-        .withColumn("bucket_start", F.col("win.start"))
-        .drop("win")
+    series = derive_series(transcripts_stream).withWatermark("ts", watermark_delay)
+    g = partials(series, F.window("ts", "1 minute").alias("win"))
+    return finish(
+        g.withColumn("bucket_start", F.col("win.start")).drop("win"), "1m", settings
     )
-    return _finish_tier(g, "1m", settings)
 
 
 def start_windowed_stream(
