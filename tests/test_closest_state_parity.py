@@ -15,6 +15,9 @@ CONFIGS = [(s, 0.0, hi) for hi in (128.0, 100.0) for s in range(2, 17)]
 
 
 def _grid() -> list[float]:
+    # the 0.1 grid holds 32.0, 83.2, 96.0 and 108.8, where a rounded
+    # floor(v/step + 0.5) and the kernel part ways for 10 states over
+    # [0, 128] (32.0 falls between two buckets' bounds: kernel state 0)
     vals = {round(k * 0.1, 1) for k in range(-20, 1320)}
     vals.update(k * 0.05 for k in range(-40, 2640))
     for s, lo, hi in CONFIGS:
@@ -62,17 +65,3 @@ def test_closest_state_matches_kernel_on_spark_and_duckdb(spark):
         assert by_v[None][f"c{i}"] == 0
         assert duck[f"c{i}"].tolist()[len(values)] == 0
 
-
-def test_ten_states_known_disagreements(spark):
-    """The four averages where floor(v/step + 0.5) and the kernel part ways
-    for 10 states over [0, 128]."""
-    vals = [32.0, 83.2, 96.0, 108.8]
-    want = [closest_discretize(v, 10, 0.0, 128.0) for v in vals]
-    got = [
-        r.s
-        for r in spark.createDataFrame([(v,) for v in vals], "v double")
-        .select(closest_state(F.col("v"), 10, 0.0, 128.0).alias("s"))
-        .collect()
-    ]
-    assert got == want
-    assert want[0] == 0  # 32.0 falls between two buckets' rounded bounds

@@ -92,11 +92,10 @@ def test_crash_before_commit_then_replay(spark, transcripts, tmp_path):
     from pyspark.sql import functions as F
 
     from tsprofiler_spark.plans.retention import (
+        batch_increments,
         merge_transcript_batch,
         touched_days,
     )
-    from tsprofiler_spark.operators.ingest import derive_series
-    from tsprofiler_spark.operators.rollup import partials, tier_bucket
 
     store = RollupStore(spark, str(tmp_path / "s"))
     wm, affected = transcripts.agg(F.max("ts"), touched_days()).collect()[0]
@@ -106,7 +105,7 @@ def test_crash_before_commit_then_replay(spark, transcripts, tmp_path):
     # batch will use, then stop — nothing committed
     run_id = "stream-7"
     _lin, ptrs = store.merge_tiers(
-        {"1m": partials(derive_series(transcripts), tier_bucket("1m"))},
+        {"1m": batch_increments(transcripts)["1m"]},
         run_id, affected=affected,
     )
     assert store.read_tier("1m") is None  # staged versions are invisible

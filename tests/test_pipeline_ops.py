@@ -358,15 +358,20 @@ def test_dedup_components_raises_on_non_convergence(spark):
 def test_dedup_components_plan_bounded_across_rounds(spark):
     """The label loop truncates lineage every round: the result's plan is
     the same size after 3 rounds as after 12 (a persisted-only loop nests
-    each generation twice, doubling the plan per round)."""
+    each generation twice, doubling the plan per round), and only the
+    final generation stays cached (each round frees the one before)."""
     from tsprofiler_spark.operators.dedup import dedup_components
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
 
     def plan_len(n):
         nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
         )
+        before = persistent().size()
         out = dedup_components(nodes, chain, max_iterations=n + 1, small_graph_edges=0)
+        assert persistent().size() - before <= 1
         assert {r.keeper_id for r in out.collect()} == {0}
         return len(out._jdf.queryExecution().optimizedPlan().toString())
 

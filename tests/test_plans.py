@@ -78,8 +78,8 @@ def test_tiers_bootstrap_single_exchange(spark, transcripts_path):
     """The finest-tier stage shuffles the raw series exactly ONCE: the
     explicit series-key repartition in merge_transcript_batch satisfies the
     1m groupBy's clustering (subset of its keys), so EnsureRequirements
-    inserts no aggregation exchange, and merge_tiers(distribute=False)
-    writes straight from the aggregation output. Pinned so a refactor can't
+    inserts no aggregation exchange, and merge_tiers writes straight from
+    the aggregation output. Pinned so a refactor can't
     silently reintroduce the second full-size shuffle."""
     from tsprofiler_spark.operators.ingest import SERIES_COLS, derive_series
     from tsprofiler_spark.operators.rollup import partials, tier_bucket

@@ -401,7 +401,9 @@ def dedup_components(
       session-wide checkpoint dir the engine does not own, and the only
       cost — an executor lost mid-loop fails the job instead of
       recomputing the round — is repaired by a rerun (the loop has no
-      side effects).
+      side effects). Each round frees the previous generation's blocks
+      once the convergence count has read them, so at most two
+      generations are held whatever the round count.
     """
     if max_iterations < 1:
         raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
@@ -473,7 +475,7 @@ def dedup_components(
         "doc_id", F.col("doc_id").alias("comp")
     )
     changed = -1
-    for _ in range(max_iterations):
+    for round_ in range(max_iterations):
         neighbor_min = (
             edges.join(labels, edges.src == labels.doc_id)
             .groupBy(edges.dst.alias("doc_id"))
@@ -496,6 +498,10 @@ def dedup_components(
             .where(F.col("n.comp") != F.col("o.comp"))
             .count()
         )
+        if round_:
+            # free the previous generation's checkpoint blocks: its plan is
+            # the checkpointed RDD, which DataFrame.unpersist does not reach
+            labels._jdf.queryExecution().logical().rdd().unpersist(False)
         labels = new_labels
         if changed == 0:
             break

@@ -70,15 +70,13 @@ def check_tiers_cfg(tiers_cfg: dict) -> dict:
     return tiers_cfg
 
 
-def expire_tiers(store: RollupStore, tiers_cfg: dict) -> dict[str, list[str]]:
+def expire_tiers(store: RollupStore, tiers_cfg: dict) -> None:
     """TTL expiry of every stored tier in ``tiers_cfg`` (already checked by
-    `check_tiers_cfg`); returns the dropped days per tier. A manifest
-    day-list scan and a pointer commit per tier — no Spark job."""
-    return {
-        tier: store.expire(tier, cfg["ttl_days"])
-        for tier, cfg in tiers_cfg.items()
-        if tier in TIER_TRUNC
-    }
+    `check_tiers_cfg`). A manifest day-list scan and a pointer commit per
+    tier — no Spark job."""
+    for tier, cfg in tiers_cfg.items():
+        if tier in TIER_TRUNC:
+            store.expire(tier, cfg["ttl_days"])
 
 
 def batch_increments(transcripts: DataFrame) -> dict[str, DataFrame]:
@@ -89,9 +87,8 @@ def batch_increments(transcripts: DataFrame) -> dict[str, DataFrame]:
     tier's groupBy clusters on a superset of the series columns, so that
     partitioning already satisfies them (no aggregation exchange), the
     three union branches of the staged write reuse the one exchange, and
-    the write runs straight from the aggregation output
-    (``merge_tiers(distribute=False)``). Staged files are
-    conversation-colocated as a result.
+    `RollupStore.merge_tiers` writes straight from the aggregation output.
+    Staged files are conversation-colocated as a result.
 
     Skew note: one task owns a whole conversation-series — the same
     per-conv concentration every gap-fill/bucketize window in the engine
@@ -139,7 +136,7 @@ def merge_transcript_batch(
     if affected is None:
         affected = format_days(transcripts.agg(touched_days()).collect()[0][0])
     lineage, pointers = store.merge_tiers(
-        batch_increments(transcripts), run_id, affected, distribute=False
+        batch_increments(transcripts), run_id, affected
     )
     store.commit_run(run_id, watermark, lineage, pointers)
     return lineage
@@ -174,9 +171,7 @@ def incremental_run(
     new_wm_iso = new_wm.isoformat(sep=" ")
     run_id = "run-" + uuid.uuid5(uuid.NAMESPACE_URL, f"{wm}->{new_wm_iso}").hex[:12]
 
-    lineage = merge_transcript_batch(
-        new, store, run_id, new_wm_iso, affected=affected
-    )
+    lineage = merge_transcript_batch(new, store, run_id, new_wm_iso, affected=affected)
 
     if expire:
         expire_tiers(store, tiers_cfg)

@@ -30,6 +30,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +42,8 @@ TIER_KEY = SERIES_COLS + ["metric", "bucket_start"]
 
 
 LINEAGE_KEEP = 256  # full per-day lineage kept for the most recent N runs
+# the manifest's saved fields (everything but its path)
+MANIFEST_KEYS = ("watermark", "runs", "tiers", "compacted_run_ids")
 
 
 @dataclass
@@ -69,13 +72,7 @@ class Manifest:
         if os.path.exists(path):
             with open(path) as f:
                 d = json.load(f)
-            return Manifest(
-                path=path,
-                watermark=d.get("watermark"),
-                runs=d.get("runs", []),
-                tiers=d.get("tiers", {}),
-                compacted_run_ids=d.get("compacted_run_ids", []),
-            )
+            return Manifest(path=path, **{k: d[k] for k in MANIFEST_KEYS if k in d})
         return Manifest(path=path)
 
     def has_run(self, run_id: str) -> bool:
@@ -85,16 +82,7 @@ class Manifest:
         tmp = self.path + ".tmp"
         os.makedirs(os.path.dirname(self.path), exist_ok=True)
         with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "watermark": self.watermark,
-                    "runs": self.runs,
-                    "tiers": self.tiers,
-                    "compacted_run_ids": self.compacted_run_ids,
-                },
-                f,
-                indent=1,
-            )
+            json.dump({k: getattr(self, k) for k in MANIFEST_KEYS}, f, indent=1)
         os.replace(tmp, self.path)  # THE atomic commit point
 
     def record_run(
@@ -225,21 +213,16 @@ class RollupStore:
         self, partials_by_tier: dict[str, DataFrame], affected: list[str]
     ) -> DataFrame:
         """Every tier's merged plan, unioned into the one staged write."""
-        plans = [
+        return reduce(DataFrame.unionByName, [
             self._merged_tier_plan(df, tier, affected).withColumn("tier", F.lit(tier))
             for tier, df in partials_by_tier.items()
-        ]
-        merged = plans[0]
-        for p in plans[1:]:
-            merged = merged.unionByName(p)
-        return merged
+        ])
 
     def merge_tiers(
         self,
         partials_by_tier: dict[str, DataFrame],
         run_id: str,
         affected: list[str],
-        distribute: bool = True,
     ) -> tuple[list[dict], dict[str, dict[str, str]]]:
         """Stage the MERGE of EVERY tier's partials as new day versions in
         ONE write job (NOT yet visible — the caller publishes atomically via
@@ -265,21 +248,12 @@ class RollupStore:
         # MERGE produces anyway). Row counts for lineage/validation come
         # from a cheap metadata-ish count over the staged files afterwards.
         #
-        # ``distribute=True``: repartition by (tier, day, conv_id-hash) — NOT
-        # by partition dirs alone: one shuffle partition per (tier, day)
-        # would serialize the write to #dirs tasks and leave one giant file
-        # per partition, strangling downstream scan parallelism. Multiple
-        # files per dir is fine (and matches how an Iceberg MERGE
-        # distributes its writes).
-        #
-        # ``distribute=False``: the caller guarantees the partials are
-        # already hash-distributed across ~shuffle.partitions tasks (e.g.
-        # retention pre-partitions the raw series by the series key, which
-        # every tier's groupBy then reuses) — writing directly saves a FULL
-        # second shuffle of the merged tiers, the single largest exchange
-        # in the job at finest-tier scale. Each task then writes one file
-        # per (tier, day) dir it holds rows for, with a conversation's rows
-        # colocated in one file.
+        # The write runs straight from the merge's aggregation output, which
+        # is already hash-distributed across ~shuffle.partitions tasks (the
+        # retention batch partitions the raw series by the series key once,
+        # and every tier's groupBy reuses it): no second shuffle of the
+        # merged tiers. Each task writes one file per (tier, day) dir it
+        # holds rows for, with a conversation's rows colocated in one file.
         # Sort within partitions by the full segment key + time. The dynamic
         # partitionBy write needs a local sort on (tier, day) anyway (one
         # open writer per dir); widening it to the series key and
@@ -289,9 +263,6 @@ class RollupStore:
         # codec can stream segments straight off the scan with no shuffle
         # (operators/compress.py compress_points_colocated).
         staging = os.path.join(self.base, f"_staging-{run_id}")
-        if distribute:
-            n_out = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            merged = merged.repartition(n_out, "tier", "day", "conv_id")
         merged = merged.sortWithinPartitions(
             "tier", "day", *SERIES_COLS, "metric", "bucket_start"
         )

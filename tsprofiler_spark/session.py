@@ -14,24 +14,44 @@ import os
 from pyspark.sql import SparkSession
 
 # Sized from the host, not from constants: the CPUs this process may run
-# on, and a driver heap of about half the physical memory. local[N] runs
-# every executor inside the driver JVM, so the heap is the whole engine's
-# memory; the other half is left to the Python workers, the page cache and
-# the OS (a heap sized past physical memory on a host without swap grows
-# until the kernel kills the JVM). Capped at 32g, beyond which compressed
-# object pointers switch off. SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM override.
+# on, and a driver heap of about half the memory it may use — physical
+# memory, or the cgroup memory limit when a container sets a lower one.
+# local[N] runs every executor inside the driver JVM, so the heap is the
+# whole engine's memory; the other half is left to the Python workers, the
+# page cache and the OS (a heap sized past that memory grows until the
+# kernel kills the JVM). Capped at 32g, beyond which compressed object
+# pointers switch off. SPARK_GRAFT_CPUS / SPARK_DRIVER_MEM override.
 DEFAULT_CPUS = int(
     os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
 )
 
 
+# cgroup v2, then v1; v2 reads "max" and v1 a near-2^63 value when unset
+CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def usable_memory() -> int:
+    """Physical memory in bytes, lowered to the cgroup memory limit when
+    one is set."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                total = min(total, int(f.read()))
+        except (OSError, ValueError):
+            pass
+    return total
+
+
 def default_driver_memory() -> str:
-    """``SPARK_DRIVER_MEM``, else half of physical memory in whole GiB
+    """``SPARK_DRIVER_MEM``, else half of `usable_memory` in whole GiB
     (at least 1g, at most 32g)."""
     if os.environ.get("SPARK_DRIVER_MEM"):
         return os.environ["SPARK_DRIVER_MEM"]
-    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    return f"{min(32, max(1, total // 2 >> 30))}g"
+    return f"{min(32, max(1, usable_memory() // 2 >> 30))}g"
 
 
 # glibc malloc tuning for the Arrow/numpy hot path (codec encode, pandas
